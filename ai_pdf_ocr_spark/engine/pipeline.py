@@ -2,8 +2,8 @@
 
 Spark re-expression of the reference's per-document flow (SURVEY.md
 §3 EP1): ``read -> [resume anti-join] -> weighted repartition ->
-mapInPandas(extract) -> write``.  Decode + layout + dedupe + filters
-are fused into a single ``mapInPandas`` so the heavy span payloads
+mapInArrow(extract) -> write``.  Decode + layout + dedupe + filters
+are fused into a single ``mapInArrow`` so the heavy span payloads
 cross the JVM<->Arrow boundary exactly once (the reference's analog:
 lazy one-time model init + page-at-a-time streaming,
 /root/reference/ocr_processor.py:47-59, /root/reference/main.py:197-280).

@@ -1,4 +1,4 @@
-"""Batch extraction driver: pandas batches of (doc_id, spans) ->
+"""Batch extraction: Arrow record batches of (doc_id, spans) ->
 (doc_id, spans_out, per-doc metrics).
 
 This is the body of the engine's single fused Arrow stage (SURVEY.md
@@ -12,25 +12,16 @@ the spans array does not change output).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from .decode import decode_flat
-from .layout import (MERGE_THRESHOLD, REMOVE_THRESHOLD, SMALL_PAGE,
-                     process_page, process_page_fast)
+from .layout import page_candidates, process_page_fast
 
 KERNEL_VERSION = "1.2.0"
 
-# upper-triangle (i<j, row-major) index cache per page size: the same
-# (i asc, j asc) visit order as the reference's nested loops
-_TRI_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-
-def _tri(n: int) -> tuple[np.ndarray, np.ndarray]:
-    got = _TRI_CACHE.get(n)
-    if got is None:
-        got = _TRI_CACHE[n] = np.triu_indices(n, k=1)
-    return got
+# read only by the benchmark's kernel probe (perfbench/kernel_pass.py),
+# which wraps this name; every page goes through process_page_fast
+process_page = process_page_fast
 
 _METRIC_COLS = ("span_count_in", "span_count_out", "malformed",
                 "merged_away", "dedup_removed", "filtered")
@@ -38,7 +29,7 @@ _METRIC_COLS = ("span_count_in", "span_count_out", "malformed",
 
 def _extract_core(n_docs: int, counts: np.ndarray, kinds, texts, mrefs,
                   offs) -> tuple:
-    """Shared core over flat per-span arrays (already doc-concatenated).
+    """Core over flat per-span arrays (already doc-concatenated).
 
     Returns (out_counts, flat out_kind/out_text/out_ref/out_order
     lists, metrics dict of int64 arrays).  Output spans are FLAT,
@@ -91,87 +82,8 @@ def _extract_core(n_docs: int, counts: np.ndarray, kinds, texts, mrefs,
         starts = np.nonzero(change)[0]
         ends = np.append(starts[1:], len(d_doc))
 
-        # ---- batched pairwise candidates over all small pages --------
-        # The O(n^2) merge (J3) and dedupe (J2) PREDICATES are pure
-        # float math -> computed here once for every (i<j) pair of every
-        # small page as flat numpy arrays (same expressions as
-        # layout._ratio_smaller_matrix/_ratio_own_matrix).  Only the
-        # order-dependent greedy STATE MACHINES stay per-page
-        # (process_page_fast), walking the candidate pairs; pairs whose
-        # geometry the merge stage changed are recomputed there around
-        # the merged blocks only.
-        sizes = ends - starts
-        merge_map: dict[int, list[tuple[int, int]]] = {}
-        dd_map: dict[int, list[tuple[int, int]]] = {}
-        pairable = np.nonzero((sizes >= 2) & (sizes <= SMALL_PAGE))[0]
-        if len(pairable):
-            pi_parts = []; pj_parts = []; li_parts = []; lj_parts = []
-            n_pairs = np.empty(len(pairable), np.int64)
-            for k, g in enumerate(pairable):
-                ti, tj = _tri(int(sizes[g]))
-                s = starts[g]
-                pi_parts.append(ti + s); pj_parts.append(tj + s)
-                li_parts.append(ti); lj_parts.append(tj)
-                n_pairs[k] = len(ti)
-            PI = np.concatenate(pi_parts); PJ = np.concatenate(pj_parts)
-            LI = np.concatenate(li_parts); LJ = np.concatenate(lj_parts)
-            pair_off = np.concatenate(([0], np.cumsum(n_pairs)))
-
-            area = (x1 - x0) * (y1 - y0)
-            is_text = okind == "text"
-            dcode = pd.factorize(direction)[0]
-
-            il = np.maximum(x0[PI], x0[PJ]); it = np.maximum(y0[PI], y0[PJ])
-            ir = np.minimum(x1[PI], x1[PJ]); ib = np.minimum(y1[PI], y1[PJ])
-            strict = (il < ir) & (it < ib)
-            inter = (ir - il) * (ib - it)
-            ai = area[PI]; aj = area[PJ]
-            smaller = np.minimum(ai, aj)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ratio_sm = np.where(strict & (smaller > 0),
-                                    inter / smaller, 0.0)
-                own_i = np.where(strict & (ai != 0), inter / ai, 0.0)
-                own_j = np.where(strict & (aj != 0), inter / aj, 0.0)
-            merge_cand = ((ratio_sm >= MERGE_THRESHOLD) & is_text[PI]
-                          & is_text[PJ] & (dcode[PI] == dcode[PJ]))
-            dd_ij = (own_i >= REMOVE_THRESHOLD) & (ai < aj)
-            dd_ji = (own_j >= REMOVE_THRESHOLD) & (aj < ai)
-
-            # group candidate pairs per page WITHOUT a per-pair Python
-            # loop: hit indices are ascending, so one searchsorted +
-            # split yields each page's slice, and zip(tolist, tolist)
-            # builds the pair lists in C (the per-pair dict-append loop
-            # was the top _extract_core cost once heavy 100-160-span
-            # pages started routing through the batched stage)
-            def _per_page(hits, firsts, seconds):
-                gs = np.searchsorted(pair_off, hits, side="right") - 1
-                cut = np.nonzero(np.diff(gs))[0] + 1
-                pages = gs[np.concatenate(([0], cut))]
-                out = {}
-                for gg, ks in zip(pages, np.split(hits, cut)):
-                    out[int(pairable[gg])] = list(
-                        zip(firsts[ks].tolist(), seconds[ks].tolist()))
-                return out
-
-            mg = np.nonzero(merge_cand)[0]
-            if len(mg):
-                merge_map = _per_page(mg, LI, LJ)
-            # dedupe candidates for EVERY small page (merge-bearing ones
-            # included: geometry-untouched pairs stay valid; pairs
-            # around merged blocks are recomputed in process_page_fast).
-            # Directed (small, large) BATCH-GLOBAL indices.
-            dd = np.nonzero(dd_ij | dd_ji)[0]
-            if len(dd):
-                small = np.where(dd_ij[dd], PI[dd], PJ[dd])
-                large = np.where(dd_ij[dd], PJ[dd], PI[dd])
-                gs = np.searchsorted(pair_off, dd, side="right") - 1
-                cut = np.nonzero(np.diff(gs))[0] + 1
-                pages = gs[np.concatenate(([0], cut))]
-                bounds = np.concatenate(([0], cut, [len(dd)]))
-                for i, gg in enumerate(pages):
-                    dd_map[int(pairable[gg])] = list(
-                        zip(small[bounds[i]:bounds[i + 1]].tolist(),
-                            large[bounds[i]:bounds[i + 1]].tolist()))
+        merge_map, dd_map = page_candidates(
+            starts, ends - starts, x0, y0, x1, y1, okind, direction)
 
         # one pre-zipped block-tuple list for the whole batch (tuple
         # field 9 = batch-global index, keyed by the dd candidates);
@@ -183,13 +95,8 @@ def _extract_core(n_docs: int, counts: np.ndarray, kinds, texts, mrefs,
 
         for gi, (s, e) in enumerate(zip(starts, ends)):
             di = int(d_doc[s])
-            if e - s <= SMALL_PAGE:
-                ks, ts, rs, orders, st = process_page_fast(
-                    all_blocks[s:e], merge_map.get(gi), dd_map.get(gi))
-            else:
-                ks, ts, rs, orders, st = process_page(
-                    x0[s:e], y0[s:e], x1[s:e], y1[s:e], conf[s:e],
-                    direction[s:e], okind[s:e], content[s:e], oref[s:e])
+            ks, ts, rs, orders, st = process_page_fast(
+                all_blocks[s:e], merge_map.get(gi), dd_map.get(gi))
             out_counts[di] += len(ks)
             out_kind.extend(ks)
             out_text.extend(ts)
@@ -247,49 +154,3 @@ def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
         cols, names=["doc_id", "spans", *_METRIC_COLS])
 
-
-def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """pandas adapter (tests / non-Arrow callers): pdf columns doc_id,
-    spans (sequences of {kind,text,media_ref,offset} dicts); returns
-    one row per doc with list-of-dict spans + metrics."""
-    n_docs = len(pdf)
-    spans_col = pdf["spans"].tolist()
-    counts = np.fromiter((0 if s is None else len(s) for s in spans_col),
-                         np.int64, n_docs)
-    total = int(counts.sum())
-    kinds = np.empty(total, object)
-    texts = np.empty(total, object)
-    mrefs = np.empty(total, object)
-    offs = np.empty(total, np.int64)
-    p = 0
-    for s in spans_col:
-        if s is None:
-            continue
-        for d in s:
-            kinds[p] = d["kind"]
-            texts[p] = d["text"]
-            mrefs[p] = d["media_ref"]
-            offs[p] = -1 if d["offset"] is None else d["offset"]
-            p += 1
-
-    out_counts, ok, ot, orf, oo, metrics = _extract_core(
-        n_docs, counts, kinds, texts, mrefs, offs)
-    off_out = np.concatenate(([0], np.cumsum(out_counts)))
-    out_spans = [
-        [{"kind": k, "text": t, "media_ref": r, "order": o}
-         for k, t, r, o in zip(ok[off_out[i]:off_out[i + 1]],
-                               ot[off_out[i]:off_out[i + 1]],
-                               orf[off_out[i]:off_out[i + 1]],
-                               oo[off_out[i]:off_out[i + 1]])]
-        for i in range(n_docs)
-    ]
-    out = pd.DataFrame({"doc_id": pdf["doc_id"].tolist(),
-                        "spans": out_spans})
-    for c in _METRIC_COLS:
-        out[c] = metrics[c]
-    return out
-
-
-def spans_to_tuples(spans: list[dict]) -> list[tuple]:
-    return [(d["kind"], d["text"], d["media_ref"], d["order"])
-            for d in spans]

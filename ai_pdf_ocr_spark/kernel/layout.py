@@ -1,13 +1,19 @@
 """Per-page reading-order kernel: merge -> cluster-sort -> interleave ->
 renumber -> dedupe -> sink filters.
 
-Vectorized transcription of ``/root/reference/text_block_sorter.py`` +
-``/root/reference/data_structures.py:136-176`` +
-``/root/reference/pdf_processor.py:148-150,244-246``: all O(n^2)
-pairwise geometry is computed as numpy float64 matrices; only the
-order-DEPENDENT greedy scans (cluster membership depends on arrival
-order and current seed set — not expressible as a window function,
-SURVEY.md §2.5) remain as loops over precomputed booleans.
+Transcription of the reference's ``text_block_sorter.py``,
+``data_structures.py:136-176`` and ``pdf_processor.py:148-150,244-246``
+in two steps; this is the only module that holds the overlap math:
+
+- ``page_candidates`` evaluates the O(n^2) J3 merge and J2 dedupe
+  PREDICATES (pure float math) for every (i<j) pair of every page of
+  an Arrow batch as flat numpy arrays, in chunks of at most
+  ``PAIR_BUDGET`` pairs;
+- ``process_page_fast`` runs the order-DEPENDENT greedy state machines
+  (merge used-state, column/row cluster membership against each
+  group's seed — not expressible as a window function, SURVEY.md
+  §2.5 — and removed-at-visit-time dedupe) as Python loops over those
+  candidate pairs, recomputing only the pairs around merged blocks.
 
 Float parity notes: every arithmetic expression keeps the reference's
 operand order ((right-left)*(bottom-top))/smaller etc.), all math is
@@ -21,6 +27,7 @@ from __future__ import annotations
 from operator import itemgetter
 
 import numpy as np
+import pandas as pd
 
 _KEY_X0 = itemgetter(0)
 _KEY_Y0 = itemgetter(1)
@@ -30,102 +37,144 @@ PT_SCALE = 72.0 / DPI
 MERGE_THRESHOLD = 0.5   # /root/reference/text_block_sorter.py:178
 REMOVE_THRESHOLD = 0.6  # /root/reference/data_structures.py:136
 
+# most (i<j) pairs whose predicates are evaluated at once: bounds the
+# flat pair arrays whatever the page size (a 4,000-span page alone has
+# 8M pairs)
+PAIR_BUDGET = 1 << 18
 
-def _pairwise_intersection(x0, y0, x1, y1):
-    il = np.maximum(x0[:, None], x0[None, :])
-    ir = np.minimum(x1[:, None], x1[None, :])
-    it = np.maximum(y0[:, None], y0[None, :])
-    ib = np.minimum(y1[:, None], y1[None, :])
-    return il, ir, it, ib
-
-
-def _ratio_smaller_matrix(x0, y0, x1, y1):
-    """Overlap vs smaller area, /root/reference/text_block_sorter.py:161-175."""
-    area = (x1 - x0) * (y1 - y0)
-    il, ir, it, ib = _pairwise_intersection(x0, y0, x1, y1)
-    strict = (il < ir) & (it < ib)
-    inter = (ir - il) * (ib - it)
-    smaller = np.minimum(area[:, None], area[None, :])
-    with np.errstate(divide="ignore", invalid="ignore"):
-        ratio = np.where(strict & (smaller > 0), inter / smaller, 0.0)
-    return ratio
+# full upper triangles of small pages, reused across batches; capped
+# at PAIR_BUDGET/16 pairs (pages up to ~180 spans, ~16 MB worst case)
+# so a long-lived worker does not keep one big triangle per page size
+_TRI_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
 
-def _ratio_own_matrix(x0, y0, x1, y1):
-    """ratio[i,j] = intersection / area_i, /root/reference/data_structures.py:41-61."""
-    area = (x1 - x0) * (y1 - y0)
-    il, ir, it, ib = _pairwise_intersection(x0, y0, x1, y1)
-    strict = (il < ir) & (it < ib)
-    inter = np.where(strict, (ir - il) * (ib - it), 0.0)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        ratio = np.where(area[:, None] == 0, 0.0, inter / area[:, None])
-    return ratio, area
+def _tri(n: int, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
+    """Local (i, j) pairs, i<j, of rows [lo, hi) of an n-span page's
+    upper triangle, row-major: the same (i asc, j asc) visit order as
+    the reference's nested loops."""
+    full = lo == 0 and hi == n - 1
+    got = _TRI_CACHE.get(n) if full else None
+    if got is None:
+        rows = np.arange(lo, hi)
+        lens = n - 1 - rows
+        ti = np.repeat(rows, lens)
+        tj = np.arange(len(ti)) - np.repeat(np.cumsum(lens) - lens - rows - 1,
+                                            lens)
+        got = ti, tj
+        if full and len(ti) <= PAIR_BUDGET >> 4:
+            _TRI_CACHE[n] = got
+    return got
 
 
-def _axis_overlap_matrix(lo, hi):
-    """overlap >= 0.5*len_i OR >= 0.5*len_j,
-    /root/reference/text_block_sorter.py:12-23 (symmetric)."""
-    length = hi - lo
-    ov = np.minimum(hi[:, None], hi[None, :]) - np.maximum(lo[:, None], lo[None, :])
-    ov = np.maximum(0.0, ov)
-    return (ov >= length[:, None] * 0.5) | (ov >= length[None, :] * 0.5)
+def _chunks(sizes):
+    """Pack the pair triangles of pages ``sizes`` into chunks of at most
+    PAIR_BUDGET pairs; yields lists of (page, lo, hi, pairs) pieces.
 
-
-def _greedy_groups(ovmat: np.ndarray) -> list[list[int]]:
-    """First-fit clustering against each existing group's SEED (its
-    first block), /root/reference/text_block_sorter.py:33-42,66-74."""
-    groups: list[list[int]] = []
-    seeds: list[int] = []
-    for a in range(ovmat.shape[0]):
-        for gi, s in enumerate(seeds):
-            if ovmat[a, s]:
-                groups[gi].append(a)
-                break
+    A page whose triangle alone exceeds the budget is split into row
+    blocks [lo, hi) (at least one row each); blocks and pages come in
+    ascending order, so each page's pairs keep their visit order
+    across chunks."""
+    chunk, acc = [], 0
+    for g, n in enumerate(sizes.tolist()):
+        if n < 2:
+            continue
+        total = n * (n - 1) // 2
+        if total <= PAIR_BUDGET:
+            pieces = [(g, 0, n - 1, total)]
         else:
-            groups.append([a])
-            seeds.append(a)
-    return groups
+            pieces, lo, block = [], 0, 0
+            for r in range(n - 1):
+                if block and block + n - 1 - r > PAIR_BUDGET:
+                    pieces.append((g, lo, r, block))
+                    lo, block = r, 0
+                block += n - 1 - r
+            pieces.append((g, lo, n - 1, block))
+        for piece in pieces:
+            if acc and acc + piece[3] > PAIR_BUDGET:
+                yield chunk
+                chunk, acc = [], 0
+            chunk.append(piece)
+            acc += piece[3]
+    if chunk:
+        yield chunk
 
 
-def _cluster_sort(idx: np.ndarray, ovmat: np.ndarray,
-                  intra_key: np.ndarray, group_key: np.ndarray,
-                  group_desc: bool) -> list[int]:
-    """Shared shape of sort_vertical / sort_horizontal
-    (/root/reference/text_block_sorter.py:26-55,58-87): greedy groups,
-    stable intra-group sort by ``intra_key``, then stable group ordering
-    by ``group_key`` of the POST-sort first member (:47-48 order)."""
-    groups = _greedy_groups(ovmat)
-    sorted_groups = []
-    for g in groups:
-        g_arr = np.asarray(g)
-        order = np.argsort(intra_key[g_arr], kind="stable")
-        sorted_groups.append(g_arr[order])
-    keys = np.array([(-group_key[g[0]] if group_desc else group_key[g[0]])
-                     for g in sorted_groups])
-    g_order = np.argsort(keys, kind="stable")
-    out: list[int] = []
-    for gi in g_order:
-        out.extend(int(idx[a]) for a in sorted_groups[gi])
-    return out
+def _extend(out, hits, firsts, seconds, pair_off, pages):
+    """Append (firsts[k], seconds[k]) for every hit to the list of the
+    page its pair belongs to.  ``hits`` ascend, so one searchsorted +
+    cut yields each page's run, and the pairs are built by zip in C
+    (a per-pair dict-append loop was the top batch-stage cost)."""
+    if not len(hits):
+        return
+    gs = np.searchsorted(pair_off, hits, side="right") - 1
+    cut = np.nonzero(np.diff(gs))[0] + 1
+    bounds = np.concatenate(([0], cut, [len(hits)])).tolist()
+    f, s = firsts.tolist(), seconds.tolist()
+    for a, b, gg in zip(bounds, bounds[1:], gs[bounds[:-1]].tolist()):
+        # extend, never assign: a page's pairs may span two chunks
+        out.setdefault(pages[gg], []).extend(zip(f[a:b], s[a:b]))
 
 
-# fast-path cutoff: the candidate-driven pure-Python path wins through
-# ~160 blocks/page (r2 A/B/A sweep: 64->3388, 192->3493-3596 docs/s on
-# the heavy-tail corpus whose p99 page is 103, max 163); the numpy
-# matrix path takes over for genuinely huge pages where O(n^2) Python
-# pair walks would dominate
-SMALL_PAGE = 160
+def page_candidates(starts, sizes, x0, y0, x1, y1, kind, direction):
+    """Batched J3 merge and J2 dedupe candidates for every page.
+
+    Page g is the slice [starts[g], starts[g] + sizes[g]) of the flat
+    per-span arrays, in arrival order.  Returns (merge, dedupe): dicts
+    page -> list of pairs, pages without candidates absent.
+
+    - merge: LOCAL (i, j), i<j, passing the J3 predicate (text-only,
+      same direction, overlap/smaller-area >= MERGE_THRESHOLD, the
+      reference's text_block_sorter.py:161-178), in (i asc, j asc)
+      order.
+    - dedupe: batch-global (small, large) with own-ratio >=
+      REMOVE_THRESHOLD and strictly smaller area (the reference's
+      data_structures.py:41-61,136-176), valid only while the merge
+      stage leaves both blocks untouched."""
+    merge: dict[int, list[tuple[int, int]]] = {}
+    dedupe: dict[int, list[tuple[int, int]]] = {}
+    area = (x1 - x0) * (y1 - y0)
+    is_text = kind == "text"
+    dcode = pd.factorize(direction)[0]
+    for chunk in _chunks(sizes):
+        pages = [g for g, *_ in chunk]
+        n_pairs = [p for *_, p in chunk]
+        tris = [_tri(int(sizes[g]), lo, hi) for g, lo, hi, _ in chunk]
+        LI = np.concatenate([ti for ti, _ in tris])
+        LJ = np.concatenate([tj for _, tj in tris])
+        base = np.repeat(starts[pages], n_pairs)
+        PI = LI + base
+        PJ = LJ + base
+        pair_off = np.concatenate(([0], np.cumsum(n_pairs)))
+
+        il = np.maximum(x0[PI], x0[PJ]); it = np.maximum(y0[PI], y0[PJ])
+        ir = np.minimum(x1[PI], x1[PJ]); ib = np.minimum(y1[PI], y1[PJ])
+        strict = (il < ir) & (it < ib)
+        inter = (ir - il) * (ib - it)
+        ai = area[PI]; aj = area[PJ]
+        smaller = np.minimum(ai, aj)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ratio_sm = np.where(strict & (smaller > 0), inter / smaller, 0.0)
+            own_i = np.where(strict & (ai != 0), inter / ai, 0.0)
+            own_j = np.where(strict & (aj != 0), inter / aj, 0.0)
+        mg = np.nonzero((ratio_sm >= MERGE_THRESHOLD) & is_text[PI]
+                        & is_text[PJ] & (dcode[PI] == dcode[PJ]))[0]
+        _extend(merge, mg, LI[mg], LJ[mg], pair_off, pages)
+        dd_ij = (own_i >= REMOVE_THRESHOLD) & (ai < aj)
+        dd_ji = (own_j >= REMOVE_THRESHOLD) & (aj < ai)
+        dd = np.nonzero(dd_ij | dd_ji)[0]
+        fwd = dd_ij[dd]
+        _extend(dedupe, dd, np.where(fwd, PI[dd], PJ[dd]),
+                np.where(fwd, PJ[dd], PI[dd]), pair_off, pages)
+    return merge, dedupe
 
 
 def process_page_fast(blocks, merge_cands, dd_cands):
-    """Pure-Python fast path for pages up to SMALL_PAGE blocks,
-    candidate-driven.
+    """Run the full page pipeline over one page of any size,
+    candidate-driven: the greedy state machines walk the pairs that
+    ``page_candidates`` found instead of an O(n^2) rescan.
 
-    At typical page sizes (10-40 blocks) numpy's per-call dispatch on
-    tiny pairwise matrices costs more than tight Python loops over
-    primitive floats (measured ~3x).  Bit-parity with the numpy path
-    and the oracle: identical IEEE doubles, identical expression order,
-    CPython's stable list.sort.
+    Bit-parity with the oracle: identical IEEE doubles, identical
+    expression order, CPython's stable list.sort.
 
     ``blocks``: list of 10-tuples (x0, y0, x1, y1, conf, direction,
     kind, text, media_ref, gidx) in arrival order — pre-zipped ONCE per
@@ -134,14 +183,14 @@ def process_page_fast(blocks, merge_cands, dd_cands):
     negative ids.
 
     ``merge_cands``: merge-candidate pairs (i<j LOCAL indices passing
-    the J3 predicate, batch-vectorized in extract.py) or None when the
+    the J3 predicate, from ``page_candidates``) or None when the
     page has none.  The greedy used-state semantics equal the reference
     nested loop because candidates arrive in the same (i asc, j asc)
     visit order.
 
     ``dd_cands``: duplicate-removal candidate pairs (small_gidx,
     large_gidx with own-ratio >= REMOVE_THRESHOLD and strictly smaller
-    area, batch-vectorized).  Valid for blocks whose geometry the merge
+    area, from ``page_candidates``).  Valid for blocks whose geometry the merge
     stage did not touch; pairs involving post-merge geometry are
     recomputed here — O(n_merged * k) instead of O(k^2) (round-2 perf:
     the full dedupe rescan was ~30%% of the kernel on merge-bearing
@@ -319,126 +368,3 @@ def process_page_fast(blocks, merge_cands, dd_cands):
         orders.append(a + 1)
     return kinds, texts, refs, orders, stats
 
-
-def process_page(x0, y0, x1, y1, conf, direction, kind, text, media_ref):
-    """Run the full page pipeline.  All array args are length-n in
-    arrival (offset) order; direction/kind/text/media_ref are object
-    arrays.  Returns (kinds, texts, refs, orders, stats)."""
-    n = len(x0)
-    stats = {"merged_away": 0, "dedup_removed": 0, "filtered": 0}
-    if n == 0:
-        return [], [], [], [], stats
-
-    # ---- merge (J3): text-only, same-direction, ratio >= 0.5 ----
-    is_text = np.fromiter((k == "text" for k in kind), bool, n)
-    same_dir = np.equal.outer(direction, direction)
-    mergeable = (
-        (_ratio_smaller_matrix(x0, y0, x1, y1) >= MERGE_THRESHOLD)
-        & same_dir & is_text[:, None] & is_text[None, :]
-    )
-    groups: list[list[int]] = []
-    used = np.zeros(n, bool)
-    for i in range(n):
-        if used[i]:
-            continue
-        used[i] = True
-        row = mergeable[i]
-        js = [j for j in range(i + 1, n) if not used[j] and row[j]]
-        for j in js:
-            used[j] = True
-        groups.append([i] + js)
-
-    m = len(groups)
-    stats["merged_away"] = n - m
-    mx0 = np.empty(m); my0 = np.empty(m); mx1 = np.empty(m); my1 = np.empty(m)
-    m_dir = np.empty(m, object)
-    m_kind = np.empty(m, object)
-    m_text = np.empty(m, object)
-    m_ref = np.empty(m, object)
-    for gi, g in enumerate(groups):
-        if len(g) == 1:
-            k = g[0]
-            mx0[gi], my0[gi], mx1[gi], my1[gi] = x0[k], y0[k], x1[k], y1[k]
-            m_dir[gi], m_kind[gi] = direction[k], kind[k]
-            m_text[gi], m_ref[gi] = text[k], media_ref[k]
-        else:
-            # /root/reference/text_block_sorter.py:220-240
-            confs = [float(conf[k]) for k in g]
-            base = g[max(range(len(g)), key=lambda a: confs[a])]
-            mx0[gi] = x0[g].min(); my0[gi] = y0[g].min()
-            mx1[gi] = x1[g].max(); my1[gi] = y1[g].max()
-            m_text[gi] = max((text[k] for k in g), key=len)
-            m_dir[gi] = direction[base]
-            m_kind[gi] = "text"
-            m_ref[gi] = None
-
-    # ---- direction split (non-h/v silently dropped, :113-114) ----
-    v_idx = np.array([i for i in range(m) if m_dir[i] == "vertical"], int)
-    h_idx = np.array([i for i in range(m) if m_dir[i] == "horizontal"], int)
-
-    v_sorted: list[int] = []
-    if len(v_idx):
-        v_sorted = _cluster_sort(
-            v_idx, _axis_overlap_matrix(mx0[v_idx], mx1[v_idx]),
-            intra_key=my0[v_idx],
-            group_key=(mx0[v_idx] + mx1[v_idx]) / 2, group_desc=True)
-    h_sorted: list[int] = []
-    if len(h_idx):
-        h_sorted = _cluster_sort(
-            h_idx, _axis_overlap_matrix(my0[h_idx], my1[h_idx]),
-            intra_key=mx0[h_idx],
-            group_key=(my0[h_idx] + my1[h_idx]) / 2, group_desc=False)
-
-    if len(v_idx) and len(h_idx):
-        # group-bbox tops, tie -> vertical first (:123-137)
-        if my0[v_idx].min() <= my0[h_idx].min():
-            final = v_sorted + h_sorted
-        else:
-            final = h_sorted + v_sorted
-    else:
-        final = v_sorted or h_sorted
-
-    f = np.asarray(final, int)
-    k_out = len(f)
-    block_id = np.arange(1, k_out + 1)  # renumber, :145-146
-
-    # ---- duplicate removal (J2), no renumbering afterwards ----
-    if k_out > 1:
-        ratio_own, areaF = _ratio_own_matrix(mx0[f], my0[f], mx1[f], my1[f])
-        removable = (ratio_own >= REMOVE_THRESHOLD) & \
-            (areaF[:, None] < areaF[None, :])
-        removed = np.zeros(k_out, bool)
-        for i in range(k_out):
-            if removed[i]:
-                continue
-            row = removable[i]
-            for j in range(k_out):
-                if i == j or removed[j]:
-                    continue
-                if row[j]:
-                    removed[i] = True
-                    break
-        stats["dedup_removed"] = int(removed.sum())
-    else:
-        removed = np.zeros(k_out, bool)
-
-    # ---- sink filters: text spans only ----
-    kinds, texts, refs, orders = [], [], [], []
-    for a in range(k_out):
-        if removed[a]:
-            continue
-        i = f[a]
-        if m_kind[i] == "text":
-            t = m_text[i]
-            if not t.strip():
-                stats["filtered"] += 1
-                continue
-            if (mx1[i] - mx0[i]) * PT_SCALE < 1 or \
-               (my1[i] - my0[i]) * PT_SCALE < 1:
-                stats["filtered"] += 1
-                continue
-        kinds.append(m_kind[i])
-        texts.append(m_text[i])
-        refs.append(m_ref[i])
-        orders.append(int(block_id[a]))
-    return kinds, texts, refs, orders, stats

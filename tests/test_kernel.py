@@ -1,23 +1,47 @@
 """Kernel vs oracle: exact (kind, text, media_ref, order) sequence
-equality on golden + randomized corpora (SURVEY.md §5 items 2/3)."""
+equality on golden + randomized corpora (SURVEY.md §5 items 2/3),
+driven through the production Arrow entry point."""
 
 from __future__ import annotations
 
-import pandas as pd
+import tracemalloc
 
-from ai_pdf_ocr_spark.fixtures.generate import golden_documents, make_documents
-from ai_pdf_ocr_spark.kernel.extract import extract_batch, spans_to_tuples
+import pandas as pd
+import pyarrow as pa
+import pytest
+
+from ai_pdf_ocr_spark.fixtures.generate import (build_document,
+                                                golden_documents,
+                                                make_documents)
+from ai_pdf_ocr_spark.kernel import layout
+from ai_pdf_ocr_spark.kernel.extract import extract_record_batch
 from tests import oracle as O
+
+# engine/schemas.py DOCUMENTS as Arrow types (no Spark import needed)
+_SPAN_IN = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string()), ("offset", pa.int32())])
+_DOCUMENTS = pa.schema([pa.field("doc_id", pa.string(), nullable=False),
+                        ("spans", pa.list_(_SPAN_IN))])
+
+
+def _batch(docs: list[dict]) -> pa.RecordBatch:
+    return pa.RecordBatch.from_pylist(
+        [{"doc_id": d["doc_id"], "spans": d["spans"]} for d in docs],
+        schema=_DOCUMENTS)
+
+
+def spans_to_tuples(spans: list[dict]) -> list[tuple]:
+    return [(d["kind"], d["text"], d["media_ref"], d["order"])
+            for d in spans]
+
+
+def _outputs(out: pa.RecordBatch) -> dict[str, list[tuple]]:
+    return {doc_id: spans_to_tuples(spans) for doc_id, spans in zip(
+        out.column("doc_id").to_pylist(), out.column("spans").to_pylist())}
 
 
 def _run_kernel(docs: list[dict]) -> dict[str, list[tuple]]:
-    pdf = pd.DataFrame({
-        "doc_id": [d["doc_id"] for d in docs],
-        "spans": [d["spans"] for d in docs],
-    })
-    out = extract_batch(pdf)
-    return {r.doc_id: spans_to_tuples(r.spans)
-            for r in out.itertuples(index=False)}
+    return _outputs(extract_record_batch(_batch(docs)))
 
 
 def _assert_corpus_equal(docs: list[dict]):
@@ -26,6 +50,23 @@ def _assert_corpus_equal(docs: list[dict]):
     assert set(got) == set(want)
     for doc_id in want:
         assert got[doc_id] == want[doc_id], doc_id
+
+
+def _one_page_doc(n_spans: int, seed: int = 11) -> dict:
+    """One page of exactly ``n_spans`` valid spans: the page-1 spans of
+    consecutive heavy-tailed docs, in arrival order, offsets renumbered
+    (the composition perfbench/corpus.py uses for its dense pages)."""
+    spans: list[dict] = []
+    g = 0
+    while len(spans) < n_spans:
+        g += 1
+        d = build_document(f"gen-{g:06d}", seed, heavy_tail=True)
+        for s in sorted(d["spans"], key=lambda s: s["offset"]):
+            b = O.parse_span(s["kind"], s["text"], s["media_ref"], 0)
+            if b is not None and b.page == 1:
+                spans.append(s)
+    spans = [dict(s, offset=k) for k, s in enumerate(spans[:n_spans])]
+    return {"doc_id": f"page-{n_spans}", "spans": spans}
 
 
 def test_golden_corpus_exact():
@@ -45,6 +86,51 @@ def test_heavy_tail_corpus_exact():
     _assert_corpus_equal(make_documents(30, seed=5, heavy_tail_frac=0.2))
 
 
+@pytest.mark.parametrize("n_spans", [161, 500, 1000])
+def test_large_page_exact(n_spans):
+    _assert_corpus_equal([_one_page_doc(n_spans)])
+
+
+def test_small_pair_budget_exact(monkeypatch):
+    """A tiny budget packs every batch into many chunks and splits each
+    page's triangle into row blocks: candidates must still reach each
+    page complete and in (i asc, j asc) order."""
+    monkeypatch.setattr(layout, "PAIR_BUDGET", 64)
+    _assert_corpus_equal(make_documents(30, seed=5, heavy_tail_frac=0.2)
+                         + [_one_page_doc(161)])
+
+
+def test_huge_page_memory_bounded():
+    """A 4,000-span page (8M pairs) must not materialize all of its
+    pairs at once.  Parity at this size is left to the 1,000-span case:
+    the oracle is O(n^2) Python."""
+    rb = _batch([_one_page_doc(4000)])
+    tracemalloc.start()
+    try:
+        out = extract_record_batch(rb)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert out.column("span_count_in").to_pylist() == [4000]
+    assert peak < 200 * 2**20, peak
+
+
+def test_sliced_batch_with_null_offset():
+    """A sliced batch (nonzero list offset) holding a null ``offset``:
+    the flatten must start at the slice and a null offset arrives
+    first on its page (filled with -1)."""
+    docs = make_documents(3, seed=21)
+    spans = docs[1]["spans"]
+    last = max(range(len(spans)), key=lambda k: spans[k]["offset"])
+    spans[last] = dict(spans[last], offset=None)
+    got = _outputs(extract_record_batch(_batch(docs).slice(1)))
+    assert list(got) == [docs[1]["doc_id"], docs[2]["doc_id"]]
+    filled = [dict(s, offset=-1 if s["offset"] is None else s["offset"])
+              for s in spans]
+    assert got[docs[1]["doc_id"]] == O.extract_document(filled)
+    assert got[docs[2]["doc_id"]] == O.extract_document(docs[2]["spans"])
+
+
 def test_empty_and_all_malformed_docs():
     docs = [
         {"doc_id": "empty", "spans": []},
@@ -55,22 +141,18 @@ def test_empty_and_all_malformed_docs():
              "offset": 1},
         ]},
     ]
-    got = _run_kernel(docs)
+    out = extract_record_batch(_batch(docs))
+    got = _outputs(out)
     assert got["empty"] == []
     assert got["allbad"] == []
-    pdf = pd.DataFrame({"doc_id": [d["doc_id"] for d in docs],
-                        "spans": [d["spans"] for d in docs]})
-    out = extract_batch(pdf).set_index("doc_id")
-    assert out.loc["allbad", "malformed"] == 2
-    assert out.loc["allbad", "span_count_in"] == 2
-    assert out.loc["empty", "span_count_out"] == 0
+    assert out.column("malformed").to_pylist() == [0, 2]
+    assert out.column("span_count_in").to_pylist() == [0, 2]
+    assert out.column("span_count_out").to_pylist() == [0, 0]
 
 
 def test_metrics_consistency():
-    docs = make_documents(100, seed=3)
-    pdf = pd.DataFrame({"doc_id": [d["doc_id"] for d in docs],
-                        "spans": [d["spans"] for d in docs]})
-    out = extract_batch(pdf)
+    out = extract_record_batch(_batch(make_documents(100, seed=3))) \
+        .to_pandas()
     # in = out + malformed + merged_away + dedup_removed + filtered + dropped-direction
     slack = (out.span_count_in - out.span_count_out - out.malformed
              - out.merged_away - out.dedup_removed - out.filtered)
