@@ -17,14 +17,31 @@ from __future__ import annotations
 
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernel.extract import KERNEL_VERSION
+from . import schemas
 from .io import TableStore
-from .partitioning import (DEFAULT_BUCKETS, assign_bins, compute_assignment,
-                           mapping_df, with_bin)
+from .partitioning import (DEFAULT_BUCKETS, compute_assignment, mapping_df,
+                           with_bin)
 from .pipeline import extract_documents
+
+# lineage columns of a bin that received no docs
+_EMPTY_BIN = {"doc_id_min": None, "doc_id_max": None, "doc_count": 0,
+              "span_count_in": 0, "span_count_out": 0, "dedup_removed": 0}
+
+
+def done_bins(store: TableStore, run_id: str) -> set[int]:
+    """Bins of ``run_id`` that already have a 'done' lineage row."""
+    return {
+        r.bin for r in
+        store.read_checkpoint()
+        .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
+        .select("bin").distinct().collect()
+    }
 
 
 def run_extraction(spark: SparkSession, documents: DataFrame,
@@ -41,17 +58,11 @@ def run_extraction(spark: SparkSession, documents: DataFrame,
     # deterministic bins MUST be derived from the full corpus (resume
     # filtering happens after) so reruns reproduce identical layout
     assignment = compute_assignment(documents, num_partitions, buckets)
-    binned = assign_bins(documents, num_partitions, buckets,
-                         assignment=assignment)
+    # one mapping table for both broadcast joins below
+    map_df = mapping_df(spark, assignment, num_partitions)
+    done = done_bins(store, run_id)
 
-    ckpt = store.read_checkpoint()
-    done = {
-        r.bin for r in
-        ckpt.where((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .select("bin").distinct().collect()
-    }
-
-    todo = binned
+    todo = with_bin(documents, map_df, buckets)
     if done:
         todo = todo.where(~F.col("bin").isin(*done))
     if _bin_filter is not None:
@@ -70,15 +81,17 @@ def run_extraction(spark: SparkSession, documents: DataFrame,
             .sortWithinPartitions("doc_id"))
     # re-derive bin from doc_id after the UDF via the same broadcast
     # mapping table (avoids threading bin through the Arrow stage)
-    extracted = with_bin(extract_documents(part),
-                         mapping_df(spark, assignment, num_partitions),
+    extracted = with_bin(extract_documents(part), map_df,
                          buckets).drop("rep")
 
     store.write_extracted(extracted, mode="overwrite")
     wall = time.monotonic() - t0
 
-    # lineage + metrics per bin, derived from the committed output
-    new = (
+    # lineage + metrics per bin, aggregated once from the committed
+    # output; bins that received zero docs still get a 'done' row so
+    # resume never retargets them
+    stats = {
+        r.bin: r.asDict() for r in
         store.read_extracted()
         .where(F.col("bin").isin(*target_bins))
         .groupBy("bin")
@@ -88,26 +101,16 @@ def run_extraction(spark: SparkSession, documents: DataFrame,
              F.sum("span_count_in").alias("span_count_in"),
              F.sum("span_count_out").alias("span_count_out"),
              F.sum("dedup_removed").alias("dedup_removed"))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("kernel_version", F.lit(KERNEL_VERSION))
-        .withColumn("wall_time_s", F.lit(float(wall)))
-        .withColumn("status", F.lit("done"))
-        .select("run_id", "bin", "doc_id_min", "doc_id_max", "doc_count",
-                "span_count_in", "span_count_out", "dedup_removed",
-                "kernel_version", "wall_time_s", "status")
-    )
-    rows = new.collect()
-    docs_processed = sum(r.doc_count for r in rows)
-    # bins that received zero docs still get a 'done' row so resume
-    # never retargets them
-    empty_bins = set(target_bins) - {r.bin for r in rows}
-    if empty_bins:
-        zeros = spark.createDataFrame(
-            [(run_id, b, None, None, 0, 0, 0, 0, KERNEL_VERSION,
-              float(wall), "done") for b in sorted(empty_bins)],
-            schema=new.schema)
-        new = new.unionByName(zeros)
-    store.append_checkpoint(new)
+        .collect()
+    }
+    lineage = [{**stats.get(b, _EMPTY_BIN), "run_id": run_id, "bin": b,
+                "kernel_version": KERNEL_VERSION, "wall_time_s": wall,
+                "status": "done"} for b in target_bins]
+    # one file per run: the Arrow-backed local relation would otherwise
+    # be written by up to defaultParallelism tasks
+    store.append_checkpoint(spark.createDataFrame(pa.Table.from_pylist(
+        lineage, schema=to_arrow_schema(schemas.CHECKPOINT))).coalesce(1))
     return {"run_id": run_id, "bins_done_prior": sorted(done),
             "bins_processed": target_bins,
-            "docs_processed": docs_processed, "wall_time_s": wall}
+            "docs_processed": sum(r["doc_count"] for r in lineage),
+            "wall_time_s": wall}

@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import schemas
 
@@ -99,5 +100,8 @@ class TableStore:
 
     def read_checkpoint(self) -> DataFrame:
         if not self.exists("checkpoint"):
-            return self.spark.createDataFrame([], schema=schemas.CHECKPOINT)
+            # Arrow-backed, so the optimizer answers queries on it with
+            # no Spark job (an empty list-built frame is an RDD scan)
+            return self.spark.createDataFrame(
+                to_arrow_schema(schemas.CHECKPOINT).empty_table())
         return self.spark.read.parquet(self.path("checkpoint"))

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import heapq
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -97,10 +98,17 @@ def mapping_df(spark: SparkSession, assignment: dict[int, int],
     NB: a literal ``create_map``/``array`` expression is re-built PER
     ROW by Spark (measured: a 4096-pair CreateMap cost ~50x the kernel
     and leaked GC pressure); a broadcast hash join against this tiny
-    table is the scalable form."""
+    table is the scalable form.  It is built from a ``pyarrow.Table``
+    so the plan holds a ``LocalTableScan``: a Python-list
+    ``createDataFrame`` is a pickled-RDD scan that re-runs Spark work
+    on every use."""
     reps = partition_representatives(spark, num_partitions)
-    rows = [(salt, b, reps[b]) for salt, b in sorted(assignment.items())]
-    return spark.createDataFrame(rows, "salt int, bin int, rep int")
+    salts = sorted(assignment)
+    bins = [assignment[s] for s in salts]
+    return spark.createDataFrame(pa.table({
+        "salt": pa.array(salts, pa.int32()),
+        "bin": pa.array(bins, pa.int32()),
+        "rep": pa.array([reps[b] for b in bins], pa.int32())}))
 
 
 def with_bin(df: DataFrame, map_df: DataFrame,

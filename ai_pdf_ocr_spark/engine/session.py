@@ -18,7 +18,8 @@ def build_session(app: str = "ai-pdf-ocr-spark", master: str | None = None,
     # arrow_batch=4096: measured sweet spot for the fused extraction
     # stage — 1024-row batches pay ~25% more per-batch JVM<->Arrow
     # overhead, 8k+ batches lose cache locality (exp on 192k-doc corpus)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1:master.find("]")] if "[" in master else str(cpus)

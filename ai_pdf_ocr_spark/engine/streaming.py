@@ -48,15 +48,17 @@ behavior.)
 from __future__ import annotations
 
 import hashlib
+import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernel.extract import KERNEL_VERSION
 from . import schemas
 from .io import TableStore
-from .partitioning import (DEFAULT_BUCKETS, assign_bins, compute_assignment,
-                           mapping_df, with_bin)
+from .partitioning import (DEFAULT_BUCKETS, compute_assignment, mapping_df,
+                           with_bin)
 from .pipeline import extract_documents
 
 STREAM_TABLE = "documents_extracted_stream"
@@ -93,8 +95,10 @@ def _dup_flags(spark: SparkSession, store: TableStore, stream_id: str,
     """(doc_id, dup_exact, dup_near) for docs whose signatures appear
     in STRICTLY EARLIER epochs of this stream's history."""
     if not store.exists(SIG_TABLE):
-        return spark.createDataFrame(
-            [], "doc_id string, dup_exact boolean, dup_near boolean")
+        # Arrow-backed empty frame: a local relation, not an RDD scan
+        return spark.createDataFrame(pa.schema(
+            [("doc_id", pa.string()), ("dup_exact", pa.bool_()),
+             ("dup_near", pa.bool_())]).empty_table())
     history = (spark.read.parquet(store.path(SIG_TABLE))
                .where((F.col("stream") == stream_id)
                       & (F.col("epoch") < int(epoch_id))))
@@ -109,15 +113,15 @@ def _dup_flags(spark: SparkSession, store: TableStore, stream_id: str,
 def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
                    stream_id: str, num_partitions: int, buckets: int,
                    batch_df: DataFrame, epoch_id: int) -> bool:
+    t0 = time.monotonic()
     if not batch_df.take(1):
         return False
     assignment = compute_assignment(batch_df, num_partitions, buckets)
-    binned = assign_bins(batch_df, num_partitions, buckets,
-                         assignment=assignment)
-    part = (binned.repartition(num_partitions, "rep")
+    map_df = mapping_df(spark, assignment, num_partitions)
+    part = (with_bin(batch_df, map_df, buckets)
+            .repartition(num_partitions, "rep")
             .sortWithinPartitions("doc_id"))
-    extracted = with_bin(extract_documents(part),
-                         mapping_df(spark, assignment, num_partitions),
+    extracted = with_bin(extract_documents(part), map_df,
                          buckets).drop("rep")
 
     # cross-epoch dedup: flag docs already seen in earlier epochs,
@@ -143,6 +147,7 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("stream", "epoch", "bin")
         .parquet(store.path(STREAM_TABLE)))
+    wall = time.monotonic() - t0
     # lineage from the COMMITTED files (same discipline as batch).
     # Idempotent under epoch replay: the append-only checkpoint table
     # cannot rewrite rows, so a replayed epoch (same stream-checkpoint
@@ -168,7 +173,7 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
                  F.sum("dedup_removed").alias("dedup_removed"))
             .withColumn("run_id", F.lit(f"{run_id}{marker}"))
             .withColumn("kernel_version", F.lit(KERNEL_VERSION))
-            .withColumn("wall_time_s", F.lit(0.0))
+            .withColumn("wall_time_s", F.lit(wall))
             .withColumn("status", F.lit("done"))
             .select("run_id", "bin", "doc_id_min", "doc_id_max",
                     "doc_count", "span_count_in", "span_count_out",

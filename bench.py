@@ -17,7 +17,7 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # extraction corpus size scales with sf; sf0.1 is sized so the measured
 # time is dominated by pipeline throughput, not per-run fixed overhead
 _EXTRACT_DOCS = {"sf0.001": 500, "sf0.01": 4000, "sf0.1": 48000}

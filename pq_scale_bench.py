@@ -45,7 +45,7 @@ import sys
 import time
 
 N = int(os.environ.get("PQ_BENCH_N", "500000"))
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # bump _v when synth_embeddings changes — the _SUCCESS cache check
 # would otherwise silently reuse a stale corpus (bench.py::ensure_
 # corpus learned the same lesson; r5 code-review)

@@ -367,3 +367,50 @@ def test_pq_encode_no_shuffle(spark):
     plan = _executed_plan(all_queries()["ann_pq_topk"].fn(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan[:2000]
     assert "Exchange hashpartitioning" not in plan, plan[:2000]
+
+
+def test_extraction_mapping_table_is_local_relation(spark, tmp_path):
+    """The extraction stage run_extraction composes broadcasts its
+    (salt, bin, rep) mapping table from an Arrow local relation, never
+    from a pickled-RDD scan of a Python list."""
+    from ai_pdf_ocr_spark.engine.checkpoint import run_extraction
+    from ai_pdf_ocr_spark.engine.io import TableStore
+    from ai_pdf_ocr_spark.engine.pipeline import documents_df
+    from ai_pdf_ocr_spark.fixtures.generate import make_documents
+
+    written = []
+
+    class Capture(TableStore):
+        def write_extracted(self, df, mode="append"):
+            written.append(df)
+            super().write_extracted(df, mode)
+
+    # documents from parquet, so any RDD scan left in the plan is a
+    # table built in Python
+    src = str(tmp_path / "docs")
+    documents_df(spark, make_documents(20, seed=5)).write.parquet(src)
+    run_extraction(spark, spark.read.parquet(src),
+                   Capture(spark, str(tmp_path / "t")), "plan", 4)
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan[:3000]
+    # both broadcast joins (bin before the exchange, bin re-derived
+    # after the kernel) read the mapping table from a LocalTableScan
+    assert _count(r"BroadcastExchange[^\n]*\n[\s:]*\+- LocalTableScan "
+                  r"\[salt", plan) == 2, plan[:3000]
+
+
+def test_done_bins_on_fresh_store_launches_no_job(spark, tmp_path):
+    """A store with no checkpoint yields an Arrow-backed empty frame, so
+    the resume query is answered by the optimizer without a Spark job."""
+    from ai_pdf_ocr_spark.engine.checkpoint import done_bins
+    from ai_pdf_ocr_spark.engine.io import TableStore
+
+    sc = spark.sparkContext
+    group = f"done-bins-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        assert done_bins(TableStore(spark, str(tmp_path / "t")), "r") \
+            == set()
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -5,6 +5,8 @@ recompute done bins."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from ai_pdf_ocr_spark.engine.checkpoint import run_extraction
@@ -66,3 +68,43 @@ def test_checkpoint_lineage_rows(spark, tmp_path):
     for r in ck:
         if r.doc_count:
             assert r.doc_id_min <= r.doc_id_max
+
+
+def _checkpoint_files(store):
+    return sorted(f for f in os.listdir(store.path("checkpoint"))
+                  if f.endswith(".parquet"))
+
+
+def test_lineage_empty_bins_one_file_per_run(spark, tmp_path):
+    """More bins than docs: every bin gets exactly one 'done' row (the
+    empty ones with zero counts and null doc-id bounds), and each run
+    appends exactly one checkpoint file."""
+    docs = make_documents(5, seed=13)
+    df = documents_df(spark, docs)
+    store = TableStore(spark, str(tmp_path / "t"))
+    P = 8
+    s1 = run_extraction(spark, df, store, "run-E", P)
+    assert s1["docs_processed"] == 5
+    assert s1["bins_processed"] == list(range(P))
+    files = _checkpoint_files(store)
+    assert len(files) == 1
+
+    ck = store.read_checkpoint().collect()
+    assert sorted(r.bin for r in ck) == list(range(P))
+    assert all(r.status == "done" and r.run_id == "run-E" for r in ck)
+    assert sum(r.doc_count for r in ck) == 5
+    empty = [r for r in ck if r.doc_count == 0]
+    assert empty  # 5 docs cannot fill 8 bins
+    for r in empty:
+        assert r.doc_id_min is None and r.doc_id_max is None
+        assert (r.span_count_in, r.span_count_out, r.dedup_removed) \
+            == (0, 0, 0)
+
+    # no-op rerun: nothing processed, no lineage appended
+    s2 = run_extraction(spark, df, store, "run-E", P)
+    assert s2["bins_processed"] == [] and s2["docs_processed"] == 0
+    assert _checkpoint_files(store) == files
+
+    # a second run_id over the same store adds exactly one more file
+    run_extraction(spark, df, store, "run-F", P)
+    assert len(_checkpoint_files(store)) == 2

@@ -72,8 +72,10 @@ def test_stream_two_waves_then_idle(spark, tmp_path, corpus):
     run_ids = {r.run_id for r in ckpt.select("run_id").distinct().collect()}
     assert any(r.startswith("s1-") and "-e" in r for r in run_ids)
     assert any(r.startswith("s2-") and "-e" in r for r in run_ids)
-    total = sum(r.doc_count for r in ckpt.collect())
-    assert total == len(corpus)
+    lineage = ckpt.collect()
+    assert sum(r.doc_count for r in lineage) == len(corpus)
+    # every epoch's lineage carries its measured seconds to data commit
+    assert all(r.wall_time_s > 0 for r in lineage)
 
     # the session-wide overwrite mode was NOT flipped by the stream
     # writes (ADVICE r2: a lingering 'dynamic' silently changes later
