@@ -25,9 +25,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from ..kernel.extract import KERNEL_VERSION
 from . import schemas
 from .io import TableStore
-from .partitioning import (DEFAULT_BUCKETS, compute_assignment, mapping_df,
-                           with_bin)
-from .pipeline import extract_documents
+from .partitioning import DEFAULT_BUCKETS, compute_assignment, mapping_df
+from .pipeline import binned_extraction
 
 # lineage columns of a bin that received no docs
 _EMPTY_BIN = {"doc_id_min": None, "doc_id_max": None, "doc_count": 0,
@@ -44,6 +43,37 @@ def done_bins(store: TableStore, run_id: str) -> set[int]:
     }
 
 
+def append_lineage(store: TableStore, committed: DataFrame,
+                   bins: list[int], run_id: str,
+                   wall: float) -> list[dict]:
+    """Append one 'done' lineage row per bin of ``bins``, aggregated
+    once from the ``committed`` output; bins that received zero docs
+    still get a row so resume never retargets them.  Returns the rows.
+
+    The rows are collected, then written from an Arrow local relation
+    with ``coalesce(1)``: one checkpoint file per call, and no second
+    run of the aggregate (up to defaultParallelism tasks would
+    otherwise each write a file)."""
+    stats = {
+        r.bin: r.asDict() for r in
+        committed.where(F.col("bin").isin(*bins))
+        .groupBy("bin")
+        .agg(F.min("doc_id").alias("doc_id_min"),
+             F.max("doc_id").alias("doc_id_max"),
+             F.count("*").alias("doc_count"),
+             F.sum("span_count_in").alias("span_count_in"),
+             F.sum("span_count_out").alias("span_count_out"),
+             F.sum("dedup_removed").alias("dedup_removed"))
+        .collect()
+    }
+    lineage = [{**stats.get(b, _EMPTY_BIN), "run_id": run_id, "bin": b,
+                "kernel_version": KERNEL_VERSION, "wall_time_s": wall,
+                "status": "done"} for b in bins]
+    store.append_checkpoint(store.spark.createDataFrame(pa.Table.from_pylist(
+        lineage, schema=to_arrow_schema(schemas.CHECKPOINT))).coalesce(1))
+    return lineage
+
+
 def run_extraction(spark: SparkSession, documents: DataFrame,
                    store: TableStore, run_id: str,
                    num_partitions: int,
@@ -58,15 +88,10 @@ def run_extraction(spark: SparkSession, documents: DataFrame,
     # deterministic bins MUST be derived from the full corpus (resume
     # filtering happens after) so reruns reproduce identical layout
     assignment = compute_assignment(documents, num_partitions, buckets)
-    # one mapping table for both broadcast joins below
-    map_df = mapping_df(spark, assignment, num_partitions)
     done = done_bins(store, run_id)
-
-    todo = with_bin(documents, map_df, buckets)
-    if done:
-        todo = todo.where(~F.col("bin").isin(*done))
+    keep = [~F.col("bin").isin(*done)] if done else []
     if _bin_filter is not None:
-        todo = todo.where(F.col("bin").isin(*_bin_filter))
+        keep.append(F.col("bin").isin(*_bin_filter))
 
     target_bins = sorted(
         (set(range(num_partitions)) - done)
@@ -77,39 +102,13 @@ def run_extraction(spark: SparkSession, documents: DataFrame,
                 "bins_processed": [], "docs_processed": 0,
                 "wall_time_s": time.monotonic() - t0}
 
-    part = (todo.repartition(num_partitions, "rep")
-            .sortWithinPartitions("doc_id"))
-    # re-derive bin from doc_id after the UDF via the same broadcast
-    # mapping table (avoids threading bin through the Arrow stage)
-    extracted = with_bin(extract_documents(part), map_df,
-                         buckets).drop("rep")
-
-    store.write_extracted(extracted, mode="overwrite")
+    store.write_extracted(binned_extraction(
+        documents, mapping_df(spark, assignment, num_partitions),
+        num_partitions, buckets, *keep), mode="overwrite")
     wall = time.monotonic() - t0
 
-    # lineage + metrics per bin, aggregated once from the committed
-    # output; bins that received zero docs still get a 'done' row so
-    # resume never retargets them
-    stats = {
-        r.bin: r.asDict() for r in
-        store.read_extracted()
-        .where(F.col("bin").isin(*target_bins))
-        .groupBy("bin")
-        .agg(F.min("doc_id").alias("doc_id_min"),
-             F.max("doc_id").alias("doc_id_max"),
-             F.count("*").alias("doc_count"),
-             F.sum("span_count_in").alias("span_count_in"),
-             F.sum("span_count_out").alias("span_count_out"),
-             F.sum("dedup_removed").alias("dedup_removed"))
-        .collect()
-    }
-    lineage = [{**stats.get(b, _EMPTY_BIN), "run_id": run_id, "bin": b,
-                "kernel_version": KERNEL_VERSION, "wall_time_s": wall,
-                "status": "done"} for b in target_bins]
-    # one file per run: the Arrow-backed local relation would otherwise
-    # be written by up to defaultParallelism tasks
-    store.append_checkpoint(spark.createDataFrame(pa.Table.from_pylist(
-        lineage, schema=to_arrow_schema(schemas.CHECKPOINT))).coalesce(1))
+    lineage = append_lineage(store, store.read_extracted(), target_bins,
+                             run_id, wall)
     return {"run_id": run_id, "bins_done_prior": sorted(done),
             "bins_processed": target_bins,
             "docs_processed": sum(r["doc_count"] for r in lineage),

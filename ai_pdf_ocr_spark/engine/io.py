@@ -1,9 +1,7 @@
-"""Table writer abstraction: Iceberg when the runtime jar is present,
-parquet emulation otherwise (SURVEY.md §7 step 7 fallback — this
-sandbox has no network, so the Iceberg jar cannot be fetched; the
-writer interface keeps the swap invisible to kernels and tests).
+"""Directory-backed parquet table store.
 
-Parquet emulation of the Iceberg layout:
+Parquet layout of the engine's tables (an Iceberg writer would need
+its runtime jar, which is not part of this repository):
  - ``documents_extracted`` partitioned by ``bin`` (the deterministic
    doc_id-derived bucket — the analog of
    ``partitionedBy(bucket(N, doc_id))``)
@@ -18,15 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import schemas
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
 
 
 class TableStore:
@@ -52,16 +41,22 @@ class TableStore:
         return os.path.isdir(p) and any(
             not f.startswith(("_", ".")) for f in os.listdir(p))
 
-    def write_extracted(self, df: DataFrame, mode: str = "append") -> None:
-        # dynamic overwrite as a PER-WRITE option (never the session
-        # conf, which would silently change later mode('overwrite')
-        # writes in the same session — ADVICE r2 #3; asserted by
-        # tests/test_streaming.py): only the bin= partitions present in
-        # df are replaced, which is what makes resume/replay idempotent
-        (df.write.mode(mode).partitionBy("bin")
+    def write_partitioned(self, df: DataFrame, name: str, *cols: str,
+                          mode: str = "overwrite") -> None:
+        """The one partitioned writer of batch and streaming tables.
+
+        Dynamic overwrite is a PER-WRITE option (never the session
+        conf, which would silently change later mode('overwrite')
+        writes in the same session — ADVICE r2 #3; asserted by
+        tests/test_streaming.py): only the partitions present in df
+        are replaced, which is what makes resume/replay idempotent."""
+        (df.write.mode(mode).partitionBy(*cols)
          .option("partitionOverwriteMode", "dynamic")
          .option("compression", self.codec)
-         .parquet(self.path("documents_extracted")))
+         .parquet(self.path(name)))
+
+    def write_extracted(self, df: DataFrame, mode: str = "append") -> None:
+        self.write_partitioned(df, "documents_extracted", "bin", mode=mode)
 
     def read_extracted(self) -> DataFrame:
         return self.spark.read.parquet(self.path("documents_extracted"))

@@ -69,8 +69,7 @@ def _lpt_pack(weights: list[tuple[int, int]], p: int) -> dict[int, int]:
 
 
 def compute_assignment(df: DataFrame, num_partitions: int,
-                       buckets: int = DEFAULT_BUCKETS,
-                       weight_col: str = "spans") -> dict[int, int]:
+                       buckets: int = DEFAULT_BUCKETS) -> dict[int, int]:
     """salt -> bin map: one tiny aggregation (<= ``buckets`` rows to the
     driver) + deterministic LPT packing.  Pure function of the corpus
     weight profile, so resume re-derives identical bins (SURVEY.md §7
@@ -80,7 +79,7 @@ def compute_assignment(df: DataFrame, num_partitions: int,
     if "span_count" in df.columns:
         w_expr = F.col("span_count")
     else:
-        w_expr = F.size(F.col(weight_col))
+        w_expr = F.size(F.col("spans"))
     weights = [
         (r.salt, r.w) for r in
         df.groupBy(F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int")

@@ -15,11 +15,12 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernel.extract import extract_record_batch
 from . import schemas
+from .partitioning import with_bin
 
 
 def _extract_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -41,6 +42,23 @@ def extract_documents(df: DataFrame) -> DataFrame:
     UDFs are pruning barriers (SURVEY.md §4)."""
     return df.select("doc_id", "spans").mapInArrow(
         _extract_iter, schema=schemas.EXTRACTED)
+
+
+def binned_extraction(documents: DataFrame, map_df: DataFrame,
+                      num_partitions: int, buckets: int,
+                      *keep: Column) -> DataFrame:
+    """The extraction stage of batch and streaming jobs: bin every doc
+    through the broadcast ``map_df`` (partitioning.mapping_df), apply
+    the ``keep`` filters on ``bin`` below the Exchange (batch resume),
+    place each bin in its own partition, run the kernel, and re-derive
+    ``bin`` from doc_id after the UDF via the same mapping table (no
+    threading of bin through the Arrow stage)."""
+    binned = with_bin(documents, map_df, buckets)
+    for cond in keep:
+        binned = binned.where(cond)
+    part = (binned.repartition(num_partitions, "rep")
+            .sortWithinPartitions("doc_id"))
+    return with_bin(extract_documents(part), map_df, buckets).drop("rep")
 
 
 def extracted_spans_flat(extracted: DataFrame) -> DataFrame:

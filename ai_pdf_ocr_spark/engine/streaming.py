@@ -5,20 +5,23 @@ The batch engine (checkpoint.py) owns run-level resume; this module
 covers the other operational mode a 100 TB pipeline needs — documents
 LANDING continuously.  ``spark.readStream`` over the input directory
 gives exactly-once FILE tracking via the streaming engine's own
-checkpoint (processed files are never re-read after a restart), and
-each micro-batch runs the same fused Arrow extraction with the same
-skew-aware weighted repartition as the batch path.
+checkpoint (processed files are never re-read after a restart).
 
-Idempotent epoch replay: extracted output is written with dynamic
-partition overwrite under ``(stream, epoch, bin)`` — if a crash
-interrupts an epoch, the streaming engine replays that epoch from its
-file manifest and the rewrite replaces exactly the partitions the
-failed attempt half-wrote.  Per-(epoch, bin) lineage + span-count
-metric rows land in the shared checkpoint table with run_id
-"<run_id>-<stream_id>-e<epoch>"; the replay skip matches the exact
-``-<stream_id>-e<epoch>`` marker, so epochs of a different stream
-sharing the TableStore can never cross-match (ADVICE r2).  The
-overwrite mode is a per-write option, never a session-wide conf flip.
+Each micro-batch runs the batch job body, not a copy of it:
+``pipeline.binned_extraction`` (weighted bins + the fused Arrow
+kernel), ``TableStore.write_partitioned`` (dynamic partition
+overwrite in the store's codec) and ``checkpoint.append_lineage`` (one
+'done' row per bin, empty bins included, one checkpoint file per
+epoch).  Only the stream's own parts live here: the empty-epoch check,
+the cross-epoch dedup flags and signatures, the ``(stream, epoch)``
+partition columns and the replay-marker skip.
+
+Idempotent epoch replay: output is partitioned by
+``(stream, epoch, bin)``, so a replayed epoch rewrites exactly the
+partitions the failed attempt half-wrote.  Lineage rows carry run_id
+"<run_id>-<stream_id>-e<epoch>"; the replay skips the append when rows
+with that exact ``-<stream_id>-e<epoch>`` marker exist, so epochs of a
+different stream sharing the TableStore can never cross-match.
 
 Cross-epoch dedup (VERDICT r2 ask #5): every epoch appends its docs'
 signatures — the exact content digest plus MinHash LSH band keys — to
@@ -54,12 +57,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernel.extract import KERNEL_VERSION
 from . import schemas
+from .checkpoint import append_lineage
 from .io import TableStore
-from .partitioning import (DEFAULT_BUCKETS, compute_assignment, mapping_df,
-                           with_bin)
-from .pipeline import extract_documents
+from .partitioning import DEFAULT_BUCKETS, compute_assignment, mapping_df
+from .pipeline import binned_extraction
 
 STREAM_TABLE = "documents_extracted_stream"
 SIG_TABLE = "stream_signatures"
@@ -117,12 +119,9 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
     if not batch_df.take(1):
         return False
     assignment = compute_assignment(batch_df, num_partitions, buckets)
-    map_df = mapping_df(spark, assignment, num_partitions)
-    part = (with_bin(batch_df, map_df, buckets)
-            .repartition(num_partitions, "rep")
-            .sortWithinPartitions("doc_id"))
-    extracted = with_bin(extract_documents(part), map_df,
-                         buckets).drop("rep")
+    extracted = binned_extraction(
+        batch_df, mapping_df(spark, assignment, num_partitions),
+        num_partitions, buckets)
 
     # cross-epoch dedup: flag docs already seen in earlier epochs,
     # then append this epoch's signatures (idempotent: dynamic
@@ -134,21 +133,13 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
                              F.coalesce("dup_exact", F.lit(False)))
                  .withColumn("dup_near",
                              F.coalesce("dup_near", F.lit(False))))
-    (new_keys.withColumn("stream", F.lit(stream_id))
-     .withColumn("epoch", F.lit(int(epoch_id)))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("stream", "epoch")
-     .parquet(store.path(SIG_TABLE)))
-
-    out = (extracted.withColumn("stream", F.lit(stream_id))
-           .withColumn("epoch", F.lit(int(epoch_id))))
-    (out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("stream", "epoch", "bin")
-        .parquet(store.path(STREAM_TABLE)))
+    epoch = {"stream": F.lit(stream_id), "epoch": F.lit(int(epoch_id))}
+    store.write_partitioned(new_keys.withColumns(epoch), SIG_TABLE,
+                            "stream", "epoch")
+    store.write_partitioned(extracted.withColumns(epoch), STREAM_TABLE,
+                            "stream", "epoch", "bin")
     wall = time.monotonic() - t0
-    # lineage from the COMMITTED files (same discipline as batch).
+    # lineage from the COMMITTED files (same builder as batch).
     # Idempotent under epoch replay: the append-only checkpoint table
     # cannot rewrite rows, so a replayed epoch (same stream-checkpoint
     # dir -> same stream_id + epoch_id, regardless of the caller's
@@ -161,25 +152,11 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
                 .take(1))
     if existing:
         return True
-    committed = (spark.read.parquet(store.path(STREAM_TABLE))
+    committed = (read_stream_extracted(spark, store)
                  .where((F.col("stream") == stream_id)
                         & (F.col("epoch") == int(epoch_id))))
-    rows = (committed.groupBy("bin")
-            .agg(F.min("doc_id").alias("doc_id_min"),
-                 F.max("doc_id").alias("doc_id_max"),
-                 F.count("*").alias("doc_count"),
-                 F.sum("span_count_in").alias("span_count_in"),
-                 F.sum("span_count_out").alias("span_count_out"),
-                 F.sum("dedup_removed").alias("dedup_removed"))
-            .withColumn("run_id", F.lit(f"{run_id}{marker}"))
-            .withColumn("kernel_version", F.lit(KERNEL_VERSION))
-            .withColumn("wall_time_s", F.lit(wall))
-            .withColumn("status", F.lit("done"))
-            .select("run_id", "bin", "doc_id_min", "doc_id_max",
-                    "doc_count", "span_count_in", "span_count_out",
-                    "dedup_removed", "kernel_version", "wall_time_s",
-                    "status"))
-    store.append_checkpoint(rows)
+    append_lineage(store, committed, list(range(num_partitions)),
+                   f"{run_id}{marker}", wall)
     return True
 
 

@@ -83,10 +83,10 @@ def main(argv=None) -> int:
     from ai_pdf_ocr_spark.engine.checkpoint import run_extraction
     from ai_pdf_ocr_spark.engine.io import TableStore
 
+    p = args.partitions or 2 * spark.sparkContext.defaultParallelism
+    store = TableStore(spark, args.output)
     if args.stream_input:
         from ai_pdf_ocr_spark.engine.streaming import stream_extract
-        p = args.partitions or 2 * spark.sparkContext.defaultParallelism
-        store = TableStore(spark, args.output)
         summary = stream_extract(spark, args.stream_input, store,
                                  args.run_id, p, buckets=args.buckets)
         print(json.dumps({"run_id": args.run_id, **summary}))
@@ -101,8 +101,6 @@ def main(argv=None) -> int:
         from ai_pdf_ocr_spark.engine.sources import read_documents
         documents = read_documents(spark, args.input, args.input_format)
 
-    p = args.partitions or 2 * spark.sparkContext.defaultParallelism
-    store = TableStore(spark, args.output)
     summary = run_extraction(spark, documents, store, args.run_id, p,
                              buckets=args.buckets)
     print(json.dumps(summary))

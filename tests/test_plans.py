@@ -370,20 +370,22 @@ def test_pq_encode_no_shuffle(spark):
 
 
 def test_extraction_mapping_table_is_local_relation(spark, tmp_path):
-    """The extraction stage run_extraction composes broadcasts its
-    (salt, bin, rep) mapping table from an Arrow local relation, never
-    from a pickled-RDD scan of a Python list."""
+    """The extraction stage that run_extraction and a streaming epoch
+    share broadcasts its (salt, bin, rep) mapping table from an Arrow
+    local relation, never from a pickled-RDD scan of a Python list."""
     from ai_pdf_ocr_spark.engine.checkpoint import run_extraction
     from ai_pdf_ocr_spark.engine.io import TableStore
     from ai_pdf_ocr_spark.engine.pipeline import documents_df
+    from ai_pdf_ocr_spark.engine.streaming import (STREAM_TABLE,
+                                                   _process_epoch)
     from ai_pdf_ocr_spark.fixtures.generate import make_documents
 
-    written = []
+    written = {}
 
     class Capture(TableStore):
-        def write_extracted(self, df, mode="append"):
-            written.append(df)
-            super().write_extracted(df, mode)
+        def write_partitioned(self, df, name, *cols, mode="overwrite"):
+            written[name] = df
+            super().write_partitioned(df, name, *cols, mode=mode)
 
     # documents from parquet, so any RDD scan left in the plan is a
     # table built in Python
@@ -391,12 +393,15 @@ def test_extraction_mapping_table_is_local_relation(spark, tmp_path):
     documents_df(spark, make_documents(20, seed=5)).write.parquet(src)
     run_extraction(spark, spark.read.parquet(src),
                    Capture(spark, str(tmp_path / "t")), "plan", 4)
-    plan = written[0]._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan, plan[:3000]
-    # both broadcast joins (bin before the exchange, bin re-derived
-    # after the kernel) read the mapping table from a LocalTableScan
-    assert _count(r"BroadcastExchange[^\n]*\n[\s:]*\+- LocalTableScan "
-                  r"\[salt", plan) == 2, plan[:3000]
+    _process_epoch(spark, Capture(spark, str(tmp_path / "s")), "plan",
+                   "t1", 4, 4096, spark.read.parquet(src), 0)
+    for name in ("documents_extracted", STREAM_TABLE):
+        plan = written[name]._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan[:3000])
+        # both broadcast joins (bin before the exchange, bin re-derived
+        # after the kernel) read the mapping table from a LocalTableScan
+        assert _count(r"BroadcastExchange[^\n]*\n[\s:]*\+- LocalTableScan "
+                      r"\[salt", plan) == 2, (name, plan[:3000])
 
 
 def test_done_bins_on_fresh_store_launches_no_job(spark, tmp_path):
